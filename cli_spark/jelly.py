@@ -25,9 +25,9 @@ Spark shape:
   inline per the wire spec — assigns frames
   ``floor((rn-1)/rows_per_frame)`` (W2) and packs the protobuf bytes →
   frames table ``(seg, frame_index, n_rows, frame_bytes)``. One
-  shuffle on the uniform ``seg`` key; no dictionary joins (the
-  join-based strategy survives in :func:`_encode_statements_joins`
-  for namespace-bearing streams). Every id is written EXPLICITLY
+  shuffle on the uniform ``seg`` key; no dictionary joins. Namespace
+  declarations, collected once on the driver, seed segment 0's tables
+  inside the same task. Every id is written EXPLICITLY
   (legal Jelly), so any conformant decoder — including a
   frame-parallel one — can read our streams without sequential state.
 - decode: frames table → groupBy(seg) → sequential
@@ -41,9 +41,9 @@ Spark shape:
   table carries fully-resolved terms, so downstream decode is a pure
   filter+select — no dictionary joins, no shuffles.
 
-Quoted triples (RDF-star) are atomized Spark-side on encode (their
-component IRIs/datatypes feed the same dictionaries) and reassembled
-into ``"<< ... >>"`` source text on decode.
+Quoted triples (RDF-star) are atomized in the segment task on encode
+(their component IRIs/datatypes feed the same dictionaries) and
+reassembled into ``"<< ... >>"`` source text on decode.
 """
 
 from __future__ import annotations
@@ -57,7 +57,6 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from . import jellywire as JW
 
@@ -146,7 +145,6 @@ _PRE_SCHEMA = (
     "opt_max_name int, opt_max_prefix int, opt_max_dt int"
 )
 _PRE_COLS = [s.split()[0] for s in _PRE_SCHEMA.split(", ")]
-_PRE_TYPES = dict(s.rsplit(" ", 1) for s in _PRE_SCHEMA.split(", "))
 
 
 def snake_to_camel(name: str) -> str:
@@ -257,8 +255,8 @@ decode_frame = JW.decode_frame
 
 _PREFIX_RE = r"^(.*[/#])"
 
-# sort minor: fixed emit order within equal sort_key
-_MINOR_OPTIONS = 0
+# sort minor: fixed emit order within equal sort_key (the options row
+# is prepended as bytes ahead of all of these)
 _MINOR_PREFIX = 1
 _MINOR_DATATYPE = 2
 _MINOR_NAME = 3
@@ -276,20 +274,6 @@ def _infer_kind(col):
         .when(col.startswith("_:"), F.lit(T_BNODE))
         .otherwise(F.lit(T_IRI))
     )
-
-
-def _null_pre_cols(*present: str) -> list:
-    """Typed null columns for every _PRE_SCHEMA field not in `present`."""
-    out = []
-    for c in _PRE_COLS:
-        if c in ("seg", "frame_index") or c in present:
-            continue
-        out.append(F.lit(None).cast(_PRE_TYPES[c]).alias(c))
-    return out
-
-
-def _pre_order() -> list[str]:
-    return list(_PRE_COLS)
 
 
 def _quoted_atoms_py(qtext: str):
@@ -312,98 +296,6 @@ def _quoted_atoms_py(qtext: str):
                 yield (p, k, v, dt, lang)
 
     return list(rec(qtext, ""))
-
-
-def _atomize_quoted(stmts: DataFrame) -> DataFrame:
-    """statements' quoted terms → atom rows (seg, rn, pos, path, a_kind,
-    a_val, a_dtv, a_lang). Only statements with a kind-3 term enter."""
-    pieces = []
-    for pos in ("s", "p", "o", "g"):
-        if f"{pos}_kind" not in stmts.columns:
-            continue
-        pieces.append(
-            stmts.filter(F.col(f"{pos}_kind") == T_QUOTED).select(
-                "seg", "rn", F.lit(pos).alias("pos"),
-                F.col(f"{pos}_val").alias("qtext"),
-            )
-        )
-    quoted = pieces[0]
-    for p in pieces[1:]:
-        quoted = quoted.unionByName(p)
-
-    schema = (
-        "seg long, rn long, pos string, path string, a_kind int, "
-        "a_val string, a_dtv string, a_lang string"
-    )
-
-    def explode_atoms(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for seg, rn, pos, qtext in zip(
-                pdf["seg"], pdf["rn"], pdf["pos"], pdf["qtext"]
-            ):
-                for path, k, v, dt, lang in _quoted_atoms_py(qtext):
-                    out.append((seg, rn, pos, path, k, v, dt, lang))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "seg", "rn", "pos", "path", "a_kind", "a_val", "a_dtv", "a_lang",
-                ],
-            )
-
-    return quoted.mapInPandas(explode_atoms, schema)
-
-
-def _reassemble_quoted(atoms: DataFrame) -> DataFrame:
-    """atom rows (with joined nid/pid/dt_id) → (seg, rn, pos, qjson):
-    the jellywire term-dict JSON tree for each quoted term."""
-
-    def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import pandas as pd
-
-        nodes: dict[str, dict] = {}
-        recs = pdf.sort_values("path").to_dict("records")
-        for r in recs:
-            k = int(r["a_kind"])
-            if k == T_QUOTED:
-                node = {"k": T_QUOTED, "s": None, "p": None, "o": None}
-            elif k == T_IRI:
-                node = {
-                    "k": T_IRI,
-                    "pid": int(r["nid_pid"]) if pd.notna(r.get("nid_pid")) else 0,
-                    "nid": int(r["nid"]) if pd.notna(r.get("nid")) else 0,
-                }
-            elif k == T_BNODE:
-                node = {"k": T_BNODE, "v": r["a_val"]}
-            else:
-                node = {
-                    "k": T_LITERAL,
-                    "v": r["a_val"] if isinstance(r["a_val"], str) else "",
-                    "lang": r["a_lang"] if isinstance(r["a_lang"], str) else None,
-                    "dt": int(r["dt_id"]) if pd.notna(r.get("dt_id")) else 0,
-                }
-            nodes[r["path"]] = node
-        root = {"k": T_QUOTED, "s": None, "p": None, "o": None}
-        for path, node in nodes.items():
-            if "." in path:
-                parent, idx = path.rsplit(".", 1)
-                nodes[parent][("s", "p", "o")[int(idx)]] = node
-            else:
-                root[("s", "p", "o")[int(path)]] = node
-        return pd.DataFrame(
-            {
-                "seg": [pdf["seg"].iloc[0]],
-                "rn": [pdf["rn"].iloc[0]],
-                "pos": [pdf["pos"].iloc[0]],
-                "qjson": [json.dumps(root, ensure_ascii=False, sort_keys=True)],
-            }
-        )
-
-    return atoms.groupBy("seg", "rn", "pos").applyInPandas(
-        build, "seg long, rn long, pos string, qjson string"
-    )
 
 
 def _term_from_pre(r, pos: str):
@@ -590,26 +482,6 @@ def _pack_rows(pdf: "pd.DataFrame") -> tuple[int, bytes]:
     return n_rows, bytes(buf)
 
 
-def _encode_group_fn():
-    """applyInPandas encoder: one (seg, frame_index) group of pre-frame
-    rows → one binary frame via :func:`_pack_rows`."""
-
-    def encode_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import pandas as pd
-
-        n_rows, blob = _pack_rows(pdf)
-        return pd.DataFrame(
-            {
-                "seg": [int(pdf.seg.iloc[0])],
-                "frame_index": [int(pdf.frame_index.iloc[0])],
-                "n_rows": [n_rows],
-                "frame_bytes": [blob],
-            }
-        )
-
-    return encode_group
-
-
 def _slow_row(pdf: "pd.DataFrame", idx: int) -> dict:
     """Dict form of one pre-frame row for the rare row kinds."""
     import pandas as pd
@@ -734,7 +606,9 @@ def _options_row_blob(
     return b"\x0a" + _vb(len(row)) + row
 
 
-def _encode_segment_fn(physical: int, rows_per_frame: int, prefix_table: bool):
+def _encode_segment_fn(
+    physical: int, rows_per_frame: int, prefix_table: bool, namespaces: list
+):
     """groupBy(seg).applyInPandas encoder: one SEGMENT's canonical
     statement rows → that segment's frames (minus the options row,
     prepended by the caller once global declared sizes are known).
@@ -742,12 +616,15 @@ def _encode_segment_fn(physical: int, rows_per_frame: int, prefix_table: bool):
     The entire dictionary pipeline — first-use name/prefix/datatype id
     assignment, RDF-star atomization, graph-run detection, frame
     assignment — runs in-task over one bounded segment (≤ max_name_table
-    / nterms statements), replacing the join-based path's melt + 3
-    joins + pivot shuffles with plain columnar work. Ids and row order
-    replicate the join path exactly: terms rank by (first use rn, term)
-    — Spark's UTF8_BINARY collation equals Python's code-point order —
-    entry rows land in the frame of first use ahead of the using
-    statement."""
+    / nterms statements). Terms rank by (first use rn, term), in
+    code-point order; entry rows land in the frame of first use ahead of
+    the using statement.
+
+    ``namespaces`` — (name, iri) declarations in (iri, name) order —
+    seed segment 0 only: their IRIs enter the name/prefix tables at
+    rn 0 (so they take the first ids and their entries land in frame
+    0), and one namespace row per declaration follows those entries in
+    frame 0."""
     is_quads = physical == PHYSICAL_QUADS
     is_graphs = physical == PHYSICAL_GRAPHS
     positions = ["s", "p", "o"] + (["g"] if is_quads else [])
@@ -807,6 +684,8 @@ def _encode_segment_fn(physical: int, rows_per_frame: int, prefix_table: bool):
                         iri_pairs.append((rn, v))
                     if dt is not None:
                         dt_pairs.append((rn, dt))
+        if seg == 0:
+            iri_pairs.extend((0, iri) for _name, iri in namespaces)
 
         term_ids, term_items = first_use_ids(iri_pairs)
         dt_ids, dt_items = first_use_ids(dt_pairs)
@@ -826,8 +705,7 @@ def _encode_segment_fn(physical: int, rows_per_frame: int, prefix_table: bool):
         else:
             pfx_items, pfx_ids, term_pfx, term_pid = [], {}, {}, {}
 
-        # --- quoted-term ref-JSON (ids resolved from the in-task dicts;
-        # tree shape and dump flags mirror _reassemble_quoted)
+        # --- quoted-term ref-JSON (ids resolved from the in-task dicts)
         qjson_by_cell = {}
         for (i, p), atoms in trees.items():
             nodes: dict = {}
@@ -923,6 +801,22 @@ def _encode_segment_fn(physical: int, rows_per_frame: int, prefix_table: bool):
             pre_parts.append(
                 entry_rows(pfx_items, _MINOR_PREFIX, KIND_PREFIX, lambda v: v)
             )
+        if seg == 0 and namespaces:
+            iris = [iri for _name, iri in namespaces]
+            pre_parts.append(
+                pd.DataFrame(
+                    {
+                        "seg": seg,
+                        "frame_index": 0,
+                        "sort_key": 1,
+                        "minor": _MINOR_NAMESPACE,
+                        "row_kind": KIND_NAMESPACE,
+                        "name": [name for name, _iri in namespaces],
+                        "g_nid": [term_ids[t] for t in iris],
+                        "g_pid": [term_pid.get(t) for t in iris],
+                    }
+                )
+            )
 
         # --- graph runs (GRAPHS): contiguous by construction (W3 —
         # ordering is graph-first), so change points delimit runs
@@ -987,59 +881,6 @@ def _encode_segment_fn(physical: int, rows_per_frame: int, prefix_table: bool):
     return encode_segment
 
 
-def _encode_segments_fused(
-    ordered: DataFrame,
-    physical: int,
-    rows_per_frame: int,
-    seg_rows: int,
-    options: StreamOptions,
-    prefix_table: bool,
-) -> DataFrame:
-    """Fused fast path (see :func:`_encode_statements`): one shuffle on
-    the uniform ``seg`` key, dictionaries built per-task. The frames
-    persist once so a single tiny job learns the global used maxima;
-    the options row — identical for every segment, declared sizes =
-    max(configured, used) — is then prepended to each segment's first
-    frame (a pure bytes concat, no re-encode)."""
-    enc = ordered.groupBy("seg").applyInPandas(
-        _encode_segment_fn(physical, rows_per_frame, prefix_table),
-        _FRAME_USED_SCHEMA,
-    ).persist()
-    mx = enc.groupBy().agg(
-        F.max("used_name").alias("n"),
-        F.max("used_prefix").alias("p"),
-        F.max("used_dt").alias("d"),
-    ).collect()[0]
-    declared_name = max(options.max_name_table, mx["n"] or 0, 8)
-    declared_dt = max(options.max_dt_table, mx["d"] or 0, 8)
-    declared_prefix = (
-        max(options.max_prefix_table, mx["p"] or 0) if prefix_table else 0
-    )
-    blob = _options_row_blob(
-        options, physical, options.version, declared_name, declared_prefix,
-        declared_dt,
-    )
-    # each segment's first frame is at a deterministic global index:
-    # segments are full (rns are contiguous) and seg_rows is a multiple
-    # of rows_per_frame
-    stride = seg_rows // rows_per_frame
-
-    def patch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            m = pdf["frame_index"] == pdf["seg"] * stride
-            if m.any():
-                pdf = pdf.copy()
-                pdf.loc[m, "frame_bytes"] = pdf.loc[m, "frame_bytes"].map(
-                    lambda b: blob + b
-                )
-                pdf.loc[m, "n_rows"] += 1
-            yield pdf[["seg", "frame_index", "n_rows", "frame_bytes"]]
-
-    from .session import release_on_gc
-
-    return release_on_gc(enc.mapInPandas(patch, FRAME_SCHEMA), enc)
-
-
 def _encode_statements(
     spark: SparkSession,
     statements: DataFrame,
@@ -1057,23 +898,26 @@ def _encode_statements(
     before the statement that uses it. Global row order comes from the
     partition-offset rank (cli_spark.order), not a single-task window.
 
-    Two physical strategies produce the same stream:
+    After the global rank, ONE applyInPandas task per segment builds
+    that segment's dictionaries in-task and emits its frames — a single
+    shuffle on the uniform ``seg`` key, no dictionary joins (segments
+    are bounded by the declared name table, so per-task work is small
+    and constant; segments are the embarrassingly-parallel unit at
+    100 TB, mirroring the decode side's per-segment resolver).
 
-    - fused fast path (default): ONE applyInPandas task per segment
-      builds that segment's dictionaries in-task and emits its frames —
-      a single shuffle on the uniform `seg` key after the global rank,
-      no dictionary joins (segments are bounded by the declared name
-      table, so per-task work is small and constant; segments are the
-      embarrassingly-parallel unit at 100 TB, mirroring the decode
-      side's per-segment resolver).
-    - join-based path (namespace declarations only): namespaces feed
-      the seg-0 dictionary ahead of first use, which needs the
-      Spark-side dictionary/join machinery.
+    Namespace declarations are few and tiny, so they are collected to
+    the driver once, ordered by (iri, name), and handed to the segment
+    encoder, which seeds segment 0's tables with them and emits their
+    rows in frame 0 (:func:`_encode_segment_fn`). A stream built with
+    declarations declares protocol version 2.
 
-    Declared table sizes are max(configured, used) in both paths, kept
-    identical across every segment's options row (P10 later-options
-    equality)."""
+    The frames persist once so a single tiny job learns the global used
+    table sizes; the options row — identical for every segment (P10
+    later-options equality), declared sizes = max(configured, used) — is
+    then prepended to each segment's first frame (a pure bytes concat,
+    no re-encode)."""
     from .order import global_row_number
+    from .session import release_on_gc
 
     is_quads = physical == PHYSICAL_QUADS
     is_graphs = physical == PHYSICAL_GRAPHS
@@ -1101,400 +945,49 @@ def _encode_statements(
         "seg", F.floor((F.col("rn") - 1) / seg_rows).cast("long")
     )
 
-    if namespaces is None:
-        return _encode_segments_fused(
-            ordered, physical, rows_per_frame, seg_rows, options, prefix_table
-        )
-    return _encode_statements_joins(
-        ordered, physical, rows_per_frame, seg_rows, options, prefix_table,
-        namespaces,
-    )
-
-
-def _encode_statements_joins(
-    ordered: DataFrame,
-    physical: int,
-    rows_per_frame: int,
-    seg_rows: int,
-    options: StreamOptions,
-    prefix_table: bool,
-    namespaces: DataFrame | None,
-) -> DataFrame:
-    """Join-based encoder (see :func:`_encode_statements`): Spark-side
-    dictionaries + melt/resolve/pivot. Kept for streams with namespace
-    declarations, whose IRIs must enter the seg-0 dictionary before
-    first statement use."""
-    is_quads = physical == PHYSICAL_QUADS
-    is_graphs = physical == PHYSICAL_GRAPHS
-    positions = ["s", "p", "o"] + (["g"] if is_quads else [])
-    feed_positions = ["s", "p", "o"] + (["g"] if (is_quads or is_graphs) else [])
-
-    # --- quoted-term atoms (RDF-star): component IRIs/datatypes feed the
-    # dictionaries; trees reassemble into ref-JSON after the id joins
-    any_quoted = None
-    for p in positions:
-        c = F.col(f"{p}_kind") == T_QUOTED
-        any_quoted = c if any_quoted is None else (any_quoted | c)
-    quoted_stmts = ordered.filter(any_quoted).select(
-        "seg", "rn",
-        *[F.col(f"{p}_val").alias(f"{p}_val") for p in positions],
-        *[F.col(f"{p}_kind").alias(f"{p}_kind") for p in positions],
-    )
-    atoms = _atomize_quoted(quoted_stmts)
-
-    # --- name dictionary: IRI terms only (top-level + atoms + namespaces)
-    iri_feed = None
-    for p in feed_positions:
-        part = ordered.filter(F.col(f"{p}_kind") == T_IRI).select(
-            "seg", F.col(f"{p}_val").alias("term"), F.col("rn").alias("use_rn")
-        )
-        iri_feed = part if iri_feed is None else iri_feed.unionByName(part)
-    iri_feed = iri_feed.unionByName(
-        atoms.filter(F.col("a_kind") == T_IRI).select(
-            "seg", F.col("a_val").alias("term"), F.col("rn").alias("use_rn")
+    ns = (
+        []
+        if namespaces is None
+        else sorted(
+            ((r["name"], r["iri"]) for r in namespaces.collect()),
+            key=lambda d: (d[1], d[0]),
         )
     )
-    if namespaces is not None:
-        iri_feed = iri_feed.unionByName(
-            namespaces.select(
-                F.lit(0).cast("long").alias("seg"),
-                F.col("iri").alias("term"),
-                F.lit(0).cast("long").alias("use_rn"),
-            )
-        )
-    terms = iri_feed.groupBy("seg", "term").agg(F.min("use_rn").alias("first_rn"))
-    wseg = W.partitionBy("seg").orderBy("first_rn", "term")
-    dictionary = terms.withColumn("term_id", F.dense_rank().over(wseg))
-
-    # prefix table (F1): greedy split at the last / or # of each
-    # dictionary term. On the REAL wire, prefix_id 0 inside a statement
-    # means "same prefix as the previous IRI", so with the table enabled
-    # EVERY IRI must reference its prefix explicitly — unsplittable
-    # terms reference an entry whose value is "" (what jelly-jvm does);
-    # the declared table size is raised to cover the ids actually used.
-    if prefix_table:
-        split = dictionary.withColumn(
-            "prefix", F.regexp_extract(F.col("term"), _PREFIX_RE, 1)
-        )
-        prefixes = split.groupBy("seg", "prefix").agg(
-            F.min("first_rn").alias("first_rn")
-        )
-        wp = W.partitionBy("seg").orderBy("first_rn", "prefix")
-        prefix_dict = prefixes.withColumn("pid", F.dense_rank().over(wp)).persist()
-        dict_full = (
-            split.join(prefix_dict.select("seg", "prefix", "pid"), ["seg", "prefix"])
-            .select(
-                "seg", "term", "term_id", "first_rn",
-                F.col("pid"),
-                F.expr("substring(term, length(prefix) + 1)").alias("local"),
-            )
-            .persist()
-        )
-    else:
-        prefix_dict = None
-        dict_full = dictionary.select(
-            "seg", "term", "term_id", "first_rn",
-            F.lit(None).cast("long").alias("pid"),
-            F.col("term").alias("local"),
-        ).persist()
-
-    # datatype table: literal datatypes (top-level + atoms)
-    dt_feed = None
-    for p in feed_positions:
-        part = ordered.filter(F.col(f"{p}_dtv").isNotNull()).select(
-            "seg", F.col(f"{p}_dtv").alias("dtv"), F.col("rn").alias("use_rn")
-        )
-        dt_feed = part if dt_feed is None else dt_feed.unionByName(part)
-    dt_feed = dt_feed.unionByName(
-        atoms.filter(F.col("a_dtv").isNotNull()).select(
-            "seg", F.col("a_dtv").alias("dtv"), F.col("rn").alias("use_rn")
-        )
-    )
-    dt_dict = (
-        dt_feed.groupBy("seg", "dtv")
-        .agg(F.min("use_rn").alias("first_rn"))
-        .withColumn(
-            "dt_id",
-            F.dense_rank().over(W.partitionBy("seg").orderBy("first_rn", "dtv")),
-        )
-        .persist()
-    )
-
-    # declared table sizes = max(configured, used): explicit ids stay
-    # within the declared bound for ANY input. ONE fused aggregate job
-    # (union of the per-dictionary maxima) instead of three — the
-    # persisted dictionaries all materialize concurrently under it.
-    sizes = dict_full.groupBy().agg(F.max("term_id").alias("mx")).select(
-        F.lit("name").alias("which"), "mx"
-    ).unionByName(
-        dt_dict.groupBy().agg(F.max("dt_id").alias("mx")).select(
-            F.lit("dt").alias("which"), "mx"
-        )
-    )
-    if prefix_table:
-        sizes = sizes.unionByName(
-            prefix_dict.groupBy().agg(F.max("pid").alias("mx")).select(
-                F.lit("prefix").alias("which"), "mx"
-            )
-        )
-    used = {r.which: (r.mx or 0) for r in sizes.collect()}
-    declared_name = max(options.max_name_table, used["name"], 8)
-    declared_dt = max(options.max_dt_table, used["dt"], 8)
+    enc = ordered.groupBy("seg").applyInPandas(
+        _encode_segment_fn(physical, rows_per_frame, prefix_table, ns),
+        _FRAME_USED_SCHEMA,
+    ).persist()
+    mx = enc.groupBy().agg(
+        F.max("used_name").alias("n"),
+        F.max("used_prefix").alias("p"),
+        F.max("used_dt").alias("d"),
+    ).collect()[0]
+    declared_name = max(options.max_name_table, mx["n"] or 0, 8)
+    declared_dt = max(options.max_dt_table, mx["d"] or 0, 8)
     declared_prefix = (
-        max(options.max_prefix_table, used["prefix"]) if prefix_table else 0
+        max(options.max_prefix_table, mx["p"] or 0) if prefix_table else 0
     )
     version = VERSION_MAX if namespaces is not None else options.version
-
-    # --- quoted-term JSON reassembly (ids joined at the atom level)
-    atoms_ids = (
-        atoms.join(
-            dict_full.select(
-                "seg", F.col("term").alias("a_val"),
-                F.col("term_id").alias("nid"), F.col("pid").alias("nid_pid"),
-            ),
-            ["seg", "a_val"],
-            "left",
-        )
-        .join(
-            dt_dict.select("seg", F.col("dtv").alias("a_dtv"), "dt_id"),
-            ["seg", "a_dtv"],
-            "left",
-        )
+    blob = _options_row_blob(
+        options, physical, version, declared_name, declared_prefix, declared_dt
     )
-    qjson = _reassemble_quoted(atoms_ids)
+    # each segment's first frame is at a deterministic global index:
+    # segments are full (rns are contiguous) and seg_rows is a multiple
+    # of rows_per_frame
+    stride = seg_rows // rows_per_frame
 
-    # --- melt statements, resolve refs once, pivot back
-    melted = ordered.select(
-        "seg", "rn",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(p).alias("pos"),
-                        F.col(f"{p}_val").alias("val"),
-                        F.col(f"{p}_kind").alias("kind"),
-                        F.col(f"{p}_dtv").alias("dtv"),
-                        F.col(f"{p}_lang").alias("lang"),
-                    )
-                    for p in positions
-                ]
-            )
-        ).alias("t"),
-    ).select("seg", "rn", "t.*")
-    resolved = (
-        melted.join(
-            dict_full.select(
-                "seg", F.col("term").alias("val"),
-                F.col("term_id").alias("nid"), F.col("pid"),
-            ),
-            ["seg", "val"],
-            "left",
-        )
-        .join(
-            dt_dict.select("seg", F.col("dtv").alias("dtv"), "dt_id"),
-            ["seg", "dtv"],
-            "left",
-        )
-        .join(qjson, ["seg", "rn", "pos"], "left")
-    )
+    def patch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in batches:
+            m = pdf["frame_index"] == pdf["seg"] * stride
+            if m.any():
+                pdf = pdf.copy()
+                pdf.loc[m, "frame_bytes"] = pdf.loc[m, "frame_bytes"].map(
+                    lambda b: blob + b
+                )
+                pdf.loc[m, "n_rows"] += 1
+            yield pdf[["seg", "frame_index", "n_rows", "frame_bytes"]]
 
-    def pick(pos, field, cast=None):
-        c = F.max(F.when(F.col("pos") == pos, F.col(field)))
-        return (c.cast(cast) if cast else c).alias(f"{pos}_{field}")
-
-    agg_cols = []
-    for p in positions:
-        agg_cols += [
-            pick(p, "kind", "int"),
-            F.max(
-                F.when((F.col("pos") == p) & (F.col("kind") == T_IRI), F.col("nid"))
-            ).cast("long").alias(f"{p}_nid"),
-            F.max(
-                F.when((F.col("pos") == p) & (F.col("kind") == T_IRI), F.col("pid"))
-            ).cast("long").alias(f"{p}_pid"),
-            F.max(
-                F.when(
-                    (F.col("pos") == p) & (F.col("kind") == T_QUOTED), F.col("qjson")
-                ).otherwise(F.when(F.col("pos") == p, F.col("val")))
-            ).alias(f"{p}_val"),
-            F.max(
-                F.when((F.col("pos") == p) & (F.col("kind") == T_LITERAL), F.col("dt_id"))
-            ).cast("long").alias(f"{p}_dt"),
-            F.max(
-                F.when((F.col("pos") == p) & (F.col("kind") == T_LITERAL), F.col("lang"))
-            ).alias(f"{p}_lang"),
-        ]
-    stmt = resolved.groupBy("seg", "rn").agg(*agg_cols)
-
-    frame_of = lambda rn: F.floor((rn - 1) / rows_per_frame).cast("long")  # noqa: E731
-
-    stmt_present = [
-        c for p in positions
-        for c in (f"{p}_kind", f"{p}_nid", f"{p}_pid", f"{p}_val", f"{p}_dt", f"{p}_lang")
-    ]
-    stmt_rows = stmt.select(
-        "seg",
-        frame_of(F.col("rn")).alias("frame_index"),
-        F.col("rn").alias("sort_key"),
-        F.lit(_MINOR_STATEMENT).alias("minor"),
-        F.lit(KIND_QUAD if is_quads else KIND_TRIPLE).alias("row_kind"),
-        *[F.col(c) for c in stmt_present],
-        *_null_pre_cols("sort_key", "minor", "row_kind", *stmt_present),
-    ).select(*_pre_order())
-
-    name_rows = dict_full.select(
-        "seg",
-        frame_of(F.greatest(F.col("first_rn"), F.lit(1))).alias("frame_index"),
-        F.greatest(F.col("first_rn"), F.lit(1)).alias("sort_key"),
-        F.lit(_MINOR_NAME).alias("minor"),
-        F.lit(KIND_NAME).alias("row_kind"),
-        F.col("term_id").alias("name_id"),
-        F.col("local").alias("name"),
-        *_null_pre_cols("sort_key", "minor", "row_kind", "name_id", "name"),
-    ).select(*_pre_order())
-    dt_rows = dt_dict.select(
-        "seg",
-        frame_of(F.greatest(F.col("first_rn"), F.lit(1))).alias("frame_index"),
-        F.greatest(F.col("first_rn"), F.lit(1)).alias("sort_key"),
-        F.lit(_MINOR_DATATYPE).alias("minor"),
-        F.lit(KIND_DATATYPE).alias("row_kind"),
-        F.col("dt_id").alias("name_id"),
-        F.col("dtv").alias("name"),
-        *_null_pre_cols("sort_key", "minor", "row_kind", "name_id", "name"),
-    ).select(*_pre_order())
-    branches = [stmt_rows, name_rows, dt_rows]
-    if is_graphs:
-        # graph runs: contiguous by construction (graph-first ordering);
-        # GraphStart carries the resolved graph term, GraphEnd closes it
-        runs = ordered.groupBy(
-            "seg", "g_val", "g_kind", "g_dtv", "g_lang"
-        ).agg(F.min("rn").alias("run_start"), F.max("rn").alias("run_end"))
-        runs = (
-            runs.join(
-                dict_full.select(
-                    "seg", F.col("term").alias("g_val"),
-                    F.col("term_id").alias("g_nid_j"), F.col("pid").alias("g_pid_j"),
-                ),
-                ["seg", "g_val"],
-                "left",
-            )
-            .join(
-                dt_dict.select("seg", F.col("dtv").alias("g_dtv"), F.col("dt_id")),
-                ["seg", "g_dtv"],
-                "left",
-            )
-        )
-        start_rows = runs.select(
-            "seg",
-            frame_of(F.col("run_start")).alias("frame_index"),
-            F.col("run_start").alias("sort_key"),
-            F.lit(_MINOR_GRAPH_START).alias("minor"),
-            F.lit(KIND_GRAPH_START).alias("row_kind"),
-            F.col("g_kind"),
-            F.when(F.col("g_kind") == T_IRI, F.col("g_nid_j")).alias("g_nid"),
-            F.when(F.col("g_kind") == T_IRI, F.col("g_pid_j")).alias("g_pid"),
-            F.when(F.col("g_kind").isin(T_BNODE, T_LITERAL), F.col("g_val")).alias(
-                "g_val"
-            ),
-            F.when(F.col("g_kind") == T_LITERAL, F.col("dt_id")).alias("g_dt"),
-            F.when(F.col("g_kind") == T_LITERAL, F.col("g_lang")).alias("g_lang"),
-            *_null_pre_cols(
-                "sort_key", "minor", "row_kind", "g_kind", "g_nid", "g_pid",
-                "g_val", "g_dt", "g_lang",
-            ),
-        ).select(*_pre_order())
-        end_rows = runs.select(
-            "seg",
-            frame_of(F.col("run_end")).alias("frame_index"),
-            F.col("run_end").alias("sort_key"),
-            F.lit(_MINOR_GRAPH_END).alias("minor"),
-            F.lit(KIND_GRAPH_END).alias("row_kind"),
-            *_null_pre_cols("sort_key", "minor", "row_kind"),
-        ).select(*_pre_order())
-        branches += [start_rows, end_rows]
-    if prefix_dict is not None:
-        prefix_rows = prefix_dict.select(
-            "seg",
-            frame_of(F.greatest(F.col("first_rn"), F.lit(1))).alias("frame_index"),
-            F.greatest(F.col("first_rn"), F.lit(1)).alias("sort_key"),
-            F.lit(_MINOR_PREFIX).alias("minor"),
-            F.lit(KIND_PREFIX).alias("row_kind"),
-            F.col("pid").alias("name_id"),
-            F.col("prefix").alias("name"),
-            *_null_pre_cols("sort_key", "minor", "row_kind", "name_id", "name"),
-        ).select(*_pre_order())
-        branches.append(prefix_rows)
-
-    options_rows = (
-        ordered.groupBy("seg")
-        .agg(F.min("rn").alias("first"))
-        .select(
-            "seg",
-            frame_of(F.col("first")).alias("frame_index"),
-            F.lit(0).cast("long").alias("sort_key"),
-            F.lit(_MINOR_OPTIONS).alias("minor"),
-            F.lit(KIND_OPTIONS).alias("row_kind"),
-            F.lit(version).alias("opt_version"),
-            F.lit(physical).alias("opt_physical"),
-            F.lit(options.logical_type).alias("opt_logical"),
-            F.lit(options.flags).alias("opt_flags"),
-            F.lit(declared_name).alias("opt_max_name"),
-            F.lit(declared_prefix).alias("opt_max_prefix"),
-            F.lit(declared_dt).alias("opt_max_dt"),
-            F.lit(options.stream_name).alias("aux"),
-            *_null_pre_cols(
-                "sort_key", "minor", "row_kind", "opt_version", "opt_physical",
-                "opt_logical", "opt_flags", "opt_max_name", "opt_max_prefix",
-                "opt_max_dt", "aux",
-            ),
-        )
-        .select(*_pre_order())
-    )
-    branches.append(options_rows)
-
-    if namespaces is not None:
-        # namespace declarations ride at the head of the stream (seg 0,
-        # frame 0, right after options); their IRI is a table ref
-        ns_rows = (
-            namespaces.join(
-                dict_full.filter(F.col("seg") == 0).select(
-                    F.col("term").alias("iri"),
-                    F.col("term_id").alias("g_nid"),
-                    F.col("pid").alias("g_pid"),
-                ),
-                "iri",
-            )
-            .select(
-                F.lit(0).cast("long").alias("seg"),
-                F.lit(0).cast("long").alias("frame_index"),
-                F.lit(1).cast("long").alias("sort_key"),
-                F.lit(_MINOR_NAMESPACE).alias("minor"),
-                F.lit(KIND_NAMESPACE).alias("row_kind"),
-                F.col("name"),
-                F.col("g_nid"),
-                F.col("g_pid"),
-                *_null_pre_cols(
-                    "sort_key", "minor", "row_kind", "name", "g_nid", "g_pid"
-                ),
-            )
-            .select(*_pre_order())
-        )
-        branches.append(ns_rows)
-
-    all_rows = branches[0]
-    for b in branches[1:]:
-        all_rows = all_rows.unionByName(b)
-    # seg_rows is a multiple of rows_per_frame ⇒ each frame belongs to
-    # exactly one segment; grouping carries both for the output schema.
-    from .session import release_on_gc
-
-    frames_out = all_rows.groupBy("seg", "frame_index").applyInPandas(
-        _encode_group_fn(), FRAME_SCHEMA
-    )
-    cached = [dict_full, dt_dict] + (
-        [prefix_dict] if prefix_dict is not None else []
-    )
-    return release_on_gc(frames_out, *cached)
+    return release_on_gc(enc.mapInPandas(patch, FRAME_SCHEMA), enc)
 
 
 def encode_triples(
@@ -2551,11 +2044,11 @@ def encode_quads_graphs(
 
     The reference detects runs with sequential encoder state (`lastGraph`
     compare, :57-72); here the stream is ordered (graph, s, p, o) so runs
-    are contiguous by construction, and the boundary rows fall out of a
-    groupBy over (seg, graph) — min/max row number per run — instead of a
-    row-at-a-time state machine. Dictionary, segmenting, frame
-    assignment, and the real-wire frame codec are shared with the
-    TRIPLES/QUADS encoder (GRAPHS mode in _encode_statements)."""
+    are contiguous by construction, and each segment task finds the
+    run boundaries in one pass as the change points of its ordered graph
+    column. Dictionary, segmenting, frame assignment, and the real-wire
+    frame codec are shared with the TRIPLES/QUADS encoder (GRAPHS mode
+    in _encode_statements)."""
     opts = options or StreamOptions(
         physical_type=PHYSICAL_GRAPHS, max_name_table=max_name_table,
         max_dt_table=max_name_table,

@@ -357,6 +357,16 @@ def test_cli_namespace_declarations(spark, tmp_path):
     ]) == 1
 
 
+def test_cli_to_jelly_empty_input(spark, tmp_path):
+    """An empty N-Quads document encodes to a stream of zero frames
+    (the global row rank must not build an entry-less map)."""
+    nq = tmp_path / "empty.nq"
+    nq.write_text("")
+    jelly = tmp_path / "empty.jelly"
+    assert main(["rdf", "to-jelly", str(nq), "--to", str(jelly)]) == 0
+    assert jelly.read_bytes() == b""
+
+
 def test_cli_jsonld_context_flag(spark, tmp_path):
     """--jsonld-context FILE switches the JSON-LD sink to
     compact-on-write; the flag with a non-JSON-LD output is a typed

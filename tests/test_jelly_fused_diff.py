@@ -1,30 +1,57 @@
-"""Differential gate: fused per-segment encoder vs join-based encoder.
+"""Golden-bytes pins for the per-segment Jelly encoder.
 
-The fused path (one applyInPandas task per segment, dictionaries built
-in-task — `cli_spark.jelly._encode_segments_fused`) must produce
-byte-identical frames to the join-based path it replaced
-(`_encode_statements_joins`), across prefix-table on/off and
-large/small name tables (small tables exercise multi-segment streams
-and RDF-star atoms overflowing the declared bound).
+Each case encodes the module's 300-statement fixture (RDF-star rows
+included) and must reproduce, byte for byte, the delimited stream in
+``tests/fixtures/jelly_enc_<case>.jelly``. The cases cover the prefix
+table on/off, large and small name tables (small tables give
+multi-segment streams whose RDF-star atoms overflow the declared bound),
+namespace declarations seeding segment 0's tables for TRIPLES, QUADS and
+GRAPHS, and a multi-segment stream with namespaces.
+
+The fixtures were written before namespace declarations moved into the
+per-segment encoder; the namespace cases were produced by the
+Spark-join encoder that used to serve them, so these pins also hold the
+single encoder to that encoder's output.
 """
 from __future__ import annotations
+
+from pathlib import Path
 
 import pyspark.sql.functions as F
 import pytest
 
 import cli_spark.jelly as J
-from cli_spark.jelly import (
-    PHYSICAL_TRIPLES,
-    StreamOptions,
-    _canonical_terms,
-    _encode_statements_joins,
-    _TERM_COLS,
-)
-from cli_spark.order import global_row_number
+from cli_spark.jelly import StreamOptions
+
+FIXTURES = Path(__file__).parent / "fixtures"
+
+# Listed in (iri, name) order, the order the encoder emits them in; the
+# Spark-join encoder that wrote the fixtures kept the input order of a
+# small in-memory declaration list. Name order (ab, ex, kg, zz) still
+# differs from IRI order. The ordering contract itself is pinned with
+# unsorted input in test_jelly_v2::test_namespace_declarations.
+NAMESPACES = [
+    ("zz", "http://ex.org/a/"),
+    ("ab", "http://ex.org/p/"),
+    ("ex", "http://ex.org/s/"),
+    ("kg", "kg:"),
+]
+
+# case → (physical, prefix_table, max_name_table, with namespaces)
+CASES = {
+    "triples_pfx0_n4096": ("triples", False, 4096, False),
+    "triples_pfx1_n4096": ("triples", True, 4096, False),
+    "triples_pfx0_n64": ("triples", False, 64, False),
+    "triples_pfx1_n64": ("triples", True, 64, False),
+    "triples_ns_pfx0_n4096": ("triples", False, 4096, True),
+    "triples_ns_pfx1_n4096": ("triples", True, 4096, True),
+    "triples_ns_pfx1_n64": ("triples", True, 64, True),
+    "quads_ns_pfx1_n4096": ("quads", True, 4096, True),
+    "graphs_ns_n4096": ("graphs", False, 4096, True),
+}
 
 
-@pytest.fixture(scope="module")
-def triples(spark):
+def make_triples(spark):
     rows = []
     for i in range(300):
         rows.append((f"http://ex.org/s/{i % 97}", f"http://ex.org/p/{i % 13}",
@@ -48,40 +75,50 @@ def triples(spark):
     ).persist()
 
 
-def _frames_bytes(df):
-    return {(r.seg, r.frame_index): (r.n_rows, bytes(r.frame_bytes))
-            for r in df.collect()}
+@pytest.fixture(scope="module")
+def triples(spark):
+    return make_triples(spark)
 
 
-@pytest.mark.parametrize("prefix_table", [False, True])
-@pytest.mark.parametrize("max_name_table", [4096, 64])
-def test_fused_matches_joins_bytes(spark, triples, prefix_table, max_name_table):
-    opts = StreamOptions(max_name_table=max_name_table,
-                         max_dt_table=max_name_table)
-    fused = J.encode_triples(spark, triples, rows_per_frame=16,
-                             options=opts, prefix_table=prefix_table)
-    # replicate _encode_statements' prologue, then force the joins path
-    seg_rows_raw = max(1, max_name_table // 3)
-    rpf = min(16, seg_rows_raw)
-    seg_rows = (seg_rows_raw // rpf) * rpf
-    canon = _canonical_terms(triples, False).dropDuplicates()
-    keys = [c for p in ("s", "p", "o") for c in _TERM_COLS(p)]
-    ordered = global_row_number(canon, keys).withColumn(
-        "seg", F.floor((F.col("rn") - 1) / seg_rows).cast("long"))
-    joins = _encode_statements_joins(ordered, PHYSICAL_TRIPLES, rpf,
-                                     seg_rows, opts, prefix_table, None)
-    a, b = _frames_bytes(fused), _frames_bytes(joins)
-    assert set(a) == set(b)
-    mismatches = [k for k in a if a[k] != b[k]]
-    assert not mismatches
-
-
-def test_fused_quads_roundtrip(spark, triples):
-    quads = triples.withColumn(
+def _with_graph(triples):
+    return triples.withColumn(
         "graph",
         F.when(F.col("obj_kind") == 0, F.lit("http://ex.org/g/1"))
         .otherwise(F.lit(None)),
     )
+
+
+def encode_case(spark, triples, case: str):
+    """The frames DataFrame of one golden case."""
+    physical, prefix_table, max_name, with_ns = CASES[case]
+    ns = (
+        spark.createDataFrame(NAMESPACES, "name string, iri string")
+        if with_ns else None
+    )
+    if physical == "triples":
+        opts = StreamOptions(max_name_table=max_name, max_dt_table=max_name)
+        return J.encode_triples(spark, triples, rows_per_frame=16, options=opts,
+                                prefix_table=prefix_table, namespaces=ns)
+    if physical == "quads":
+        opts = StreamOptions(physical_type=J.PHYSICAL_QUADS,
+                             max_name_table=max_name, max_dt_table=max_name)
+        return J.encode_quads(spark, _with_graph(triples), rows_per_frame=16,
+                              options=opts, prefix_table=prefix_table,
+                              namespaces=ns)
+    return J.encode_quads_graphs(spark, _with_graph(triples), rows_per_frame=16,
+                                 max_name_table=max_name, namespaces=ns)
+
+
+@pytest.mark.parametrize("case", list(CASES))
+def test_golden_bytes(spark, triples, case, tmp_path):
+    out = tmp_path / "out.jelly"
+    J.write_jelly_file(encode_case(spark, triples, case), str(out))
+    want = (FIXTURES / f"jelly_enc_{case}.jelly").read_bytes()
+    assert out.read_bytes() == want
+
+
+def test_fused_quads_roundtrip(spark, triples):
+    quads = _with_graph(triples)
     out = J.roundtrip_quads(spark, quads, rows_per_frame=16, prefix_table=True)
     got = {(r.subj, r.pred, r.obj, r.obj_kind, r.graph) for r in out.collect()}
     want = {(r.subj, r.pred, r.obj, r.obj_kind, r.graph)
@@ -91,11 +128,7 @@ def test_fused_quads_roundtrip(spark, triples):
 
 
 def test_fused_graphs_roundtrip(spark, triples):
-    quads = triples.withColumn(
-        "graph",
-        F.when(F.col("obj_kind") == 0, F.lit("http://ex.org/g/1"))
-        .otherwise(F.lit(None)),
-    )
+    quads = _with_graph(triples)
     frames = J.encode_quads_graphs(spark, quads, rows_per_frame=16)
     out = J.decode_quads_graphs(J.decode_frames(frames))
     got = {(r.subj, r.pred, r.obj, r.obj_kind, r.graph) for r in out.collect()}

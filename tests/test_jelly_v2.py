@@ -250,27 +250,37 @@ def test_validate_options_matrix(spark):
 
 
 def test_namespace_declarations(spark, iri_triples):
-    ns = spark.createDataFrame(
-        [("ex", "http://example.org/ontology/"), ("kg", "kg:")],
-        "name string, iri string",
-    )
+    # name order (ab, ex, kg, zz) differs from IRI order
+    decls = [
+        ("ex", "http://example.org/ontology/"),
+        ("kg", "kg:"),
+        ("ab", "http://zeta.org/"),
+        ("zz", "http://alpha.org/ns#"),
+    ]
+    ns = spark.createDataFrame(decls, "name string, iri string")
     rows = J.decode_frames(J.encode_triples(spark, iri_triples, namespaces=ns))
     got = {tuple(r) for r in J.namespace_declarations(rows).collect()}
-    assert got == {("ex", "http://example.org/ontology/"), ("kg", "kg:")}
-    # declarations ride in frame 0: options first, then the name/prefix
-    # entries their IRIs reference, then the namespace rows — and no
-    # namespace row precedes the entries it points at
+    assert got == set(decls)
+    # declarations ride in frame 0: options first, then the name entries
+    # their IRIs reference, then the namespace rows in (iri, name) order
     first = (
         rows.filter(F.col("frame_index") == 0)
         .orderBy("row_pos")
-        .select("row_kind")
+        .select("row_kind", "name", "aux")
         .collect()
     )
     kinds = [r.row_kind for r in first]
     assert kinds[0] == J.KIND_OPTIONS
-    assert J.KIND_NAMESPACE in kinds
-    first_ns = kinds.index(J.KIND_NAMESPACE)
-    assert J.KIND_NAME in kinds[:first_ns]
+    ns_pos = [i for i, k in enumerate(kinds) if k == J.KIND_NAMESPACE]
+    assert ns_pos == list(range(ns_pos[0], ns_pos[0] + len(decls)))
+    assert [(first[i].name, first[i].aux) for i in ns_pos] == sorted(
+        decls, key=lambda d: (d[1], d[0])
+    )
+    entries_before = {
+        r.name for r in first[: ns_pos[0]] if r.row_kind == J.KIND_NAME
+    }
+    assert {iri for _, iri in decls} <= entries_before
+    assert J.KIND_TRIPLE not in kinds[: ns_pos[0]]
 
 
 def test_options_from_file_and_cascade(spark, iri_triples, tmp_path):
